@@ -267,12 +267,16 @@ def mirror_sync_observed(
     target: DataFrame, source: DataFrame, keys: Sequence[str]
 ) -> tuple[DataFrame, "Observation"]:
     """mirror_sync with stats attached via ``Observation`` — the counts the
-    reference logs (A9) come FREE with the materializing action instead of
-    two extra count() jobs over the same inputs.
+    reference logs (A9) come with the materializing action instead of
+    extra count() jobs over the same inputs.
 
-    The post-state = deleted-target-rows ∪ source, tagged; observe() sums
-    the tags during whatever action materializes the frame (the mirror
-    write), then the tag column is dropped. Usage::
+    The frame the action runs over is source ∪ (target ⋉̸ source.keys),
+    each row tagged upsert/deleted; observe() sums the tags during whatever
+    action materializes the frame (the mirror write), and the deleted rows
+    are filtered back out before the write, so the post-state ≡ source.
+    `deleted` counts target rows whose key is absent from the source — on
+    a keyed mirror (unique, non-null keys) that is mirror_stats' count of
+    vanished keys. Usage::
 
         post, obs = mirror_sync_observed(target, source, keys)
         post.write.parquet(...)           # one job
@@ -280,16 +284,9 @@ def mirror_sync_observed(
     """
     from pyspark.sql import Observation
 
-    # mirror post-state ≡ source; deleted = target keys absent from source.
-    # The deleted rows ride along tagged so the observation counts both
-    # classes in the single output pass, then they are filtered back out.
-    deleted_count_src = target.select(*keys).distinct().join(
-        source.select(*keys).distinct(), on=list(keys), how="left_anti"
-    )
+    deleted = target.join(source.select(*keys), on=list(keys), how="left_anti")
     tagged = source.withColumn("__is_upsert", F.lit(1)).unionByName(
-        deleted_count_src.join(target, on=list(keys))  # deleted rows, full width
-        .select(*source.columns)
-        .withColumn("__is_upsert", F.lit(0))
+        deleted.select(*source.columns).withColumn("__is_upsert", F.lit(0))
     )
     obs = Observation("mirror_stats")
     observed = tagged.observe(
@@ -297,7 +294,5 @@ def mirror_sync_observed(
         F.sum("__is_upsert").alias("upserted"),
         F.sum(1 - F.col("__is_upsert")).alias("deleted"),
     )
-    # post-state excludes the deleted rows again — they were only carried so
-    # the observation sees them in the same pass
     post = observed.filter(F.col("__is_upsert") == 1).drop("__is_upsert")
     return post, obs

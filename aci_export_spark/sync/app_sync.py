@@ -28,10 +28,10 @@ from aci_export_spark.queries import entities as E
 LOAD_ORDER = ("regions", "clubs", "users", "members", "addresses", "brns", "leadership_club")
 
 
-def extract_users(tables: dict[str, DataFrame], today: str | None = None) -> DataFrame:
+def extract_users(tables: dict[str, DataFrame], mem: DataFrame) -> DataFrame:
     """users := member primaries ∪ partners ∪ leadership persons, distinct by
-    uid (A5/U2, sync.rs:497-514) — one unionByName + dropDuplicates plan."""
-    mem = M.members(tables, today=today)
+    uid (A5/U2, sync.rs:497-514) — one unionByName + dropDuplicates plan
+    over a ``members`` frame `mem`."""
     primaries = mem.select(
         F.col("user_id").alias("uid"), F.col("email"),
         F.col("first_name"), F.col("last_name"),
@@ -70,12 +70,11 @@ def extract_users(tables: dict[str, DataFrame], today: str | None = None) -> Dat
     )
 
 
-def target_members(tables: dict[str, DataFrame], today: str | None = None) -> DataFrame:
-    """db-side member rows: person keys become email hashes; intraclub
-    collapses into regular (ddb/src/members.rs:759-766)."""
-    mem = M.members(tables, today=today).filter(
-        F.col("email").isNotNull() & (F.trim(F.col("email")) != "")
-    )
+def target_members(mem: DataFrame) -> DataFrame:
+    """db-side member rows from a ``members`` frame: person keys become
+    email hashes; intraclub collapses into regular
+    (ddb/src/members.rs:759-766)."""
+    mem = mem.filter(F.col("email").isNotNull() & (F.trim(F.col("email")) != ""))
     member_type = F.when(F.col("member_type") == "intraclub", "regular").otherwise(
         F.col("member_type")
     )
@@ -97,12 +96,13 @@ def target_members(tables: dict[str, DataFrame], today: str | None = None) -> Da
 
 
 def _build_sources(
-    tables: dict[str, DataFrame], today: str | None = None
+    tables: dict[str, DataFrame], mem: DataFrame, users: DataFrame
 ) -> dict[str, tuple[DataFrame, list[str]]]:
     """Every target table's source DataFrame + mirror key, FK-safe order
-    (the extract+transform phases of §3.2 as lazy plans)."""
-    users = extract_users(tables, today=today)
-    members_t = target_members(tables, today=today)
+    (the extract+transform phases of §3.2 as lazy plans). The person-keyed
+    sources all derive from the two hub frames: `mem` (``members``) and
+    `users` (``extract_users`` of `mem`)."""
+    members_t = target_members(mem)
     clubs_t = E.clubs(tables, active_only=True).select("uid", "number", "name", "region")
     regions_t = E.regions(tables).select("uid", "number", "name")
     addresses_t = E.addresses(tables, mailing_only=True).join(
@@ -150,7 +150,8 @@ def run_mirror_sync(
     reverse order, preserving the reference's consistency discipline
     (SURVEY §7.4.5).
     """
-    sources = _build_sources(tables, today=today)
+    mem = M.members(tables, today=today)
+    sources = _build_sources(tables, mem, extract_users(tables, mem))
     post, stats = {}, {}
     for name in LOAD_ORDER:
         src, keys = sources[name]
@@ -172,10 +173,15 @@ def run_mirror_sync_and_write(
     today: str | None = None,
 ) -> dict[str, dict]:
     """One-pass sync: per entity, the mirror write IS the job that computes
-    the stats (operators/mirror.mirror_sync_observed) — no separate count
-    jobs, halving the actions per table vs run_mirror_sync + counts.
-    Writes in LOAD_ORDER through a temp dir (same discipline as
-    write_post_states). Returns the per-entity stats map.
+    the stats (operators/mirror.mirror_sync_observed), so an entity costs
+    one write instead of a write plus count jobs. The hub frames — the
+    ``members`` plan and ``extract_users`` of it — are persisted for the run
+    and feed the users, members, addresses and brns sources, so the wide
+    members plan is computed once per run, not once per entity. They are
+    unpersisted before returning (also on failure): CacheManager matches
+    cached data by plan, so a leaked entry would silently serve a later
+    ``members`` query. Writes in LOAD_ORDER through a temp dir (same
+    discipline as write_post_states). Returns the per-entity stats map.
     """
     import os
     import shutil
@@ -183,28 +189,34 @@ def run_mirror_sync_and_write(
     from aci_export_spark.operators.mirror import mirror_sync_observed
 
     targets = load_targets(spark, mirror_dir)
-    sources = _build_sources(tables, today=today)
-    stats: dict[str, dict] = {}
-    for name in LOAD_ORDER:
-        src, keys = sources[name]
-        tgt = targets.get(name)
-        if tgt is None:
-            tgt = src.limit(0)
-        t0 = time.perf_counter()
-        post, obs = mirror_sync_observed(tgt, src, keys)
-        path = os.path.join(mirror_dir, f"{name}.parquet")
-        tmp = path + ".tmp"
-        post.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
-        got = obs.get
-        stats[name] = {
-            "upserted": int(got["upserted"] or 0),
-            "deleted": int(got["deleted"] or 0),
-            "duration_s": round(time.perf_counter() - t0, 3),
-        }
-    return stats
+    mem = M.members(tables, today=today).persist()
+    users = extract_users(tables, mem).persist()
+    try:
+        sources = _build_sources(tables, mem, users)
+        stats: dict[str, dict] = {}
+        for name in LOAD_ORDER:
+            src, keys = sources[name]
+            tgt = targets.get(name)
+            if tgt is None:
+                tgt = src.limit(0)
+            t0 = time.perf_counter()
+            post, obs = mirror_sync_observed(tgt, src, keys)
+            path = os.path.join(mirror_dir, f"{name}.parquet")
+            tmp = path + ".tmp"
+            post.write.mode("overwrite").parquet(tmp)
+            if os.path.exists(path):
+                shutil.rmtree(path)
+            os.rename(tmp, path)
+            got = obs.get
+            stats[name] = {
+                "upserted": int(got["upserted"] or 0),
+                "deleted": int(got["deleted"] or 0),
+                "duration_s": round(time.perf_counter() - t0, 3),
+            }
+        return stats
+    finally:
+        users.unpersist()
+        mem.unpersist()
 
 
 def load_targets(spark, mirror_dir: str) -> dict[str, DataFrame | None]:

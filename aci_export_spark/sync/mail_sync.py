@@ -48,12 +48,13 @@ def documents_for_scope(
     """Scope dispatch (club → by_club, region → by_region, else all;
     mailchimp.rs:168-177) + document transform."""
     mem = M.members(tables, club=club, region=region, today=today)
-    defs_df, rejected = mail_mod.validate_merge_field_defs(tables["merge_field_defs"])
-    n_rejected = rejected.count()
+    # tiny schema table, one collect; member_documents skips the over-long
+    # and unknown tags itself, so only the rejection count is taken here
+    defs = [r.asDict() for r in tables["merge_field_defs"].collect()]
+    n_rejected = sum(d["tag"] is not None and len(d["tag"]) > mail_mod.MAX_TAG_LEN for d in defs)
     if n_rejected:
         log.warning("rejected %d merge-field defs (tag > 10 chars)", n_rejected)
-    field_defs = [r.asDict() for r in defs_df.collect()]  # tiny schema table
-    return mail_mod.member_documents(mem, field_defs, default_source_cols())
+    return mail_mod.member_documents(mem, defs, default_source_cols())
 
 
 def run_job(
@@ -78,15 +79,20 @@ def run_job(
     health_ping(client_factory())
     if "mailchimp_audience" not in tables:
         raise ValueError("audience table missing from catalog — nothing to sync against")
-    docs = documents_for_scope(tables, club=club, region=region, today=today)
-    # per-item rejections are logged by the sink and surfaced in the stats
-    # (the reference prints them in its SyncStats run report)
-    err_acc = docs.sparkSession.sparkContext.accumulator(0)
-    upserted = upsert_documents_sink(docs, client_factory, error_counter=err_acc)
-    deleted = retain_audience_sink(
-        tables["mailchimp_audience"], docs.select("id"), client_factory
-    )
-    tag_updates = update_tags_sink(mail_mod.member_tags(docs), client_factory)
+    # the three sinks read one persisted copy of the documents; it is
+    # released before returning, also when a sink raises
+    docs = documents_for_scope(tables, club=club, region=region, today=today).persist()
+    try:
+        # per-item rejections are logged by the sink and surfaced in the
+        # stats (the reference prints them in its SyncStats run report)
+        err_acc = docs.sparkSession.sparkContext.accumulator(0)
+        upserted = upsert_documents_sink(docs, client_factory, error_counter=err_acc)
+        deleted = retain_audience_sink(
+            tables["mailchimp_audience"], docs.select("id"), client_factory
+        )
+        tag_updates = update_tags_sink(mail_mod.member_tags(docs), client_factory)
+    finally:
+        docs.unpersist()
     return {
         "upserted": upserted - err_acc.value,
         "upsert_errors": err_acc.value,

@@ -193,8 +193,8 @@ def upsert_documents_sink(
     partition chunks rows and retries per batch. Per-item rejections inside
     an otherwise-successful batch are logged individually (the reference's
     members.rs:166-171 error loop) and counted into `error_counter` (a
-    Spark accumulator) when the caller passes one. Returns the document
-    count.
+    Spark accumulator) when the caller passes one. Returns the number of
+    documents submitted.
     """
     docs = documents.coalesce(concurrency)
 
@@ -232,7 +232,8 @@ def upsert_documents_sink(
 def retain_audience_sink(audience, keep_ids, client_factory, concurrency: int = 10) -> int:
     """S11: delete audience members whose id is not in the keep set, skipping
     status='cleaned' rows (members.rs:59-97). The diff is a broadcast
-    anti-join; only the stragglers reach the API."""
+    anti-join; only the stragglers reach the API. Returns the number of
+    members deleted."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
 
@@ -253,7 +254,8 @@ def retain_audience_sink(audience, keep_ids, client_factory, concurrency: int = 
 
 
 def update_tags_sink(tags, client_factory, batch_size: int = 1000, concurrency: int = 10) -> int:
-    """Tag updates in chunks of 1000, bounded concurrency (members.rs:249-274)."""
+    """Tag updates in chunks of 1000, bounded concurrency (members.rs:249-274).
+    Returns the number of tag updates sent."""
     t = tags.coalesce(concurrency)
 
     def push(rows) -> None:

@@ -110,6 +110,18 @@ def classify_cpu_regressions(
     return flagged
 
 
+def baseline_cpu(prev_full: dict, shape: dict) -> dict:
+    """The prior run's per-query CPU column, or {} when that run had a
+    different shape. ``shape`` holds this run's sf, reps, cpus and master:
+    CPU-seconds move with all four (another scale; a reps=1 run has no
+    median to absorb first-run classloading; more cores spread the same
+    work over more, less busy threads), so only a like-for-like prior run
+    can serve as the regression baseline."""
+    if any(str(prev_full.get(k)) != str(v) for k, v in shape.items()):
+        return {}
+    return prev_full.get("queries_cpu", {})
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -152,17 +164,18 @@ def main() -> None:
     bench_full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
     )
+    eff_master = spark.sparkContext.master
+    eff_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     prev_cpu: dict = {}
     try:
         with open(bench_full_path) as f:
             prev_full = json.load(f)
-        # cross-scale comparisons are meaningless: only baseline against a
-        # run at the SAME sf (and same reps — a reps=1 run has no median
-        # to absorb first-run classloading)
-        if str(prev_full.get("sf")) == str(
-            float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-        ) and prev_full.get("reps") == reps:
-            prev_cpu = prev_full.get("queries_cpu", {})
+        prev_cpu = baseline_cpu(prev_full, {
+            "sf": float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]),
+            "reps": reps,
+            "cpus": eff_cpus,
+            "master": eff_master,
+        })
     except (OSError, ValueError):
         pass
 
@@ -252,8 +265,6 @@ def main() -> None:
     # env-derived cpus, and the context's actual defaultParallelism in both
     # the stdout line and BENCH_FULL. Pure reporting — timing methodology
     # is unchanged.
-    eff_master = spark.sparkContext.master
-    eff_cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     full = {
         "metric": "total_query_wall_seconds",
         "value": round(sum(timings.values()), 3),

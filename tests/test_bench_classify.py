@@ -80,3 +80,17 @@ def test_compact_summary_line_fits_driver_tail():
     assert parsed["queries"]  # headline subset survives the budget
     assert parsed["n_cpu_regressions"] == 40
     assert "rep_totals" not in parsed and "queries_cpu" not in parsed
+
+
+def test_cpu_baseline_requires_same_run_shape():
+    """The committed baseline is used only for a run of the same sf, reps,
+    core count and master: an 8-core baseline must not judge a 32-core run."""
+    prev = {"sf": 0.1, "reps": 3, "cpus": 8, "master": "local[8]",
+            "queries_cpu": {"a": 1.0}}
+    same = {"sf": 0.1, "reps": 3, "cpus": 8, "master": "local[8]"}
+    assert bench.baseline_cpu(prev, same) == {"a": 1.0}
+    for key, other in (("sf", 0.01), ("reps", 1), ("cpus", 32), ("master", "local[32]")):
+        assert bench.baseline_cpu(prev, {**same, key: other}) == {}, key
+    # a baseline written before the file recorded its core count matches nothing
+    legacy = {k: v for k, v in prev.items() if k not in ("cpus", "master")}
+    assert bench.baseline_cpu(legacy, same) == {}

@@ -72,9 +72,10 @@ class TestAppSync:
         assert post.filter(F.col("uid") == 99999).count() == 0
 
     def test_user_consolidation_includes_partners_and_leaders(self, aci):
+        from aci_export_spark.queries.members import members
         from aci_export_spark.sync.app_sync import extract_users
 
-        users = extract_users(aci, today=TODAY_S)
+        users = extract_users(aci, members(aci, today=TODAY_S))
         # synthetic id present and email-derived (db/src/user.rs:31-35)
         row = users.filter(F.col("email").isNotNull()).first()
         digest = hashlib.sha256(row["email"].strip().lower().encode()).digest()
@@ -427,6 +428,120 @@ class TestObservedSync:
         stats3 = run_mirror_sync_and_write(aci, spark, m1, today=TODAY_S)
         for name in LOAD_ORDER:
             assert stats3[name]["deleted"] == 0, name
+
+        # incremental: members and a club vanished from the catalog; synced
+        # over the existing mirror, the observed deletes equal the two-pass
+        # path's counts taken against the same mirror state
+        cut = cut_catalog(aci)
+        _, stats4 = run_mirror_sync(cut, load_targets(spark, m1), today=TODAY_S)
+        stats5 = run_mirror_sync_and_write(cut, spark, m1, today=TODAY_S)
+        for name in LOAD_ORDER:
+            for k in ("upserted", "deleted"):
+                assert stats5[name][k] == stats4[name][k], (name, k)
+            written = spark.read.parquet(os.path.join(m1, f"{name}.parquet"))
+            assert written.count() == stats5[name]["upserted"], name
+        assert any(stats5[name]["deleted"] for name in LOAD_ORDER)
+
+
+def cut_catalog(aci):
+    """The fixture catalog with a quarter of the members and one club (with
+    its leadership) removed: an incremental sync over a mirror of `aci`
+    deletes rows."""
+    cut = dict(aci)
+    cut["member_search"] = aci["member_search"].filter(F.col("user_id") % 4 != 1)
+    cut["clubs"] = aci["clubs"].filter(F.col("uid") != 3)
+    return cut
+
+
+#: ceilings on the Spark jobs one sync step starts (ROADMAP direction 2).
+#: Measured 31 / 50 / 27 at SPARK_GRAFT_CPUS=2, 4 and 8 (the count does not
+#: move with the core count); each ceiling is that plus a ~10% margin.
+JOB_BUDGET = {
+    "sync_first": 34,  # empty mirror: one write job per entity + hub builds
+    "sync_incremental": 55,  # over an existing mirror: adds its scans
+    "mail_job": 30,  # audience job: documents once, three sinks and their counts
+}
+
+
+class TestJobBudget:
+    """Each sync step stays within its pinned Spark job count."""
+
+    @staticmethod
+    def _jobs(spark, group, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_sync_and_mail_job_counts(self, spark, aci, tmp_path):
+        from aci_export_spark.sync.app_sync import run_mirror_sync_and_write
+        from aci_export_spark.sync.mail_sync import run_job
+        from aci_export_spark.sync.rest import JournalingMailchimpClient
+
+        mirror, journal = str(tmp_path / "m"), str(tmp_path / "j")
+        steps = {
+            "sync_first": lambda: run_mirror_sync_and_write(aci, spark, mirror, today=TODAY_S),
+            "sync_incremental": lambda: run_mirror_sync_and_write(
+                cut_catalog(aci), spark, mirror, today=TODAY_S),
+            "mail_job": lambda: run_job(
+                aci, lambda: JournalingMailchimpClient(journal), today=TODAY_S),
+        }
+        got = {name: self._jobs(spark, f"budget-{name}", fn) for name, fn in steps.items()}
+        over = {k: (n, JOB_BUDGET[k]) for k, n in got.items() if n > JOB_BUDGET[k]}
+        assert not over, f"(jobs, budget) over budget: {over}"
+
+
+class TestHubLifecycle:
+    """The sync runs persist their hub frames (members/users, documents)
+    and must release them before returning: CacheManager matches cached
+    data by plan, so a leaked entry would silently serve later lookups."""
+
+    @staticmethod
+    def _persisted(spark) -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    def _assert_released(self, spark, aci, before):
+        from aci_export_spark.queries.members import member_by_email
+
+        assert self._persisted(spark) == before
+        plan = member_by_email(aci, "user2@mail.test", today=TODAY_S)._jdf \
+            .queryExecution().withCachedData().toString()
+        assert "InMemoryRelation" not in plan
+
+    def test_sync_releases_hub(self, spark, aci, tmp_path):
+        from aci_export_spark.sync.app_sync import run_mirror_sync_and_write
+
+        before = self._persisted(spark)
+        run_mirror_sync_and_write(aci, spark, str(tmp_path), today=TODAY_S)
+        self._assert_released(spark, aci, before)
+
+    def test_mail_job_releases_documents(self, spark, aci, tmp_path):
+        from aci_export_spark.sync.mail_sync import run_job
+        from aci_export_spark.sync.rest import JournalingMailchimpClient
+
+        before = self._persisted(spark)
+        run_job(aci, lambda: JournalingMailchimpClient(str(tmp_path / "ok")), today=TODAY_S)
+        self._assert_released(spark, aci, before)
+
+    def test_failed_mail_job_releases_documents(self, spark, aci, tmp_path):
+        from aci_export_spark.sync.mail_sync import run_job
+        from aci_export_spark.sync.rest import JournalingMailchimpClient, PermanentError
+
+        base = str(tmp_path / "j")
+
+        class RejectingClient(JournalingMailchimpClient):
+            def batch_upsert(self, members):
+                raise PermanentError(400, "invalid resource")
+
+        before = self._persisted(spark)
+        with pytest.raises(Exception, match="invalid resource"):
+            run_job(aci, lambda: RejectingClient(base), today=TODAY_S)
+        assert JournalingMailchimpClient(base).upserted_rows() == []
+        self._assert_released(spark, aci, before)
 
 
 def test_read_jsonl_quarantines_malformed(spark, tmp_path):
